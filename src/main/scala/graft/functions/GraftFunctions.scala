@@ -79,8 +79,10 @@ object GraftFunctions {
   }
 
   /** F5 — ISO-8601 date truncation: `2025-03-22T00:00:00+08:00` → date.
-    * (ref `src/import_xml_history.py:66-71`) */
-  def isoDate(c: Column): Column = to_date(substring_index(c, "T", 1))
+    * (ref `src/import_xml_history.py:66-71`) An empty or unparseable
+    * value is NULL (`try_to_date`): under ANSI `to_date` throws on `""`,
+    * and one member without the date field would fail its whole batch. */
+  def isoDate(c: Column): Column = try_to_date(substring_index(c, "T", 1))
 
   /** F6 — numeric coercion with 0-default, pandas `errors='coerce'` twin.
     * (ref `src/import_xml_history.py:78-82`) ANSI-safe via try_cast. */

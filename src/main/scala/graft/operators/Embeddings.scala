@@ -100,23 +100,16 @@ object Embeddings {
     * never is. Initial centroids: the `k` smallest `idCol` rows in id
     * order (deterministic seed-free init).
     *
-    * Scale shape, per iteration: ONE scan-side codegen'd assignment pass
-    * (the k×dim centroid matrix folds into the expression as literals —
-    * bounded driver state, the [[Similarity]] codebook contract) and ONE
-    * hash aggregate with `dim+1` map-side-partial sums — no explode, no
-    * per-row join against the centroid table. Empty cells keep their
-    * previous centroid. `k`×`dim` term count is codegen'd; keep
-    * k×dim ≲ 10k (beyond that, the IVF codebook path in [[Similarity]]
-    * is the right tool). */
+    * Training is [[trainExactBooks]] with m = 1; the final assignment is
+    * one more scan with the same argmin ([[exactCell]]). */
   def kmeansExact(embs: DataFrame, idCol: String, vecCol: String,
                   dim: Int, k: Int = 4, iters: Int = 2,
                   scale: Int = 1000): DataFrame = {
     require(k >= 1 && iters >= 0 && dim >= 1)
     val base = quantizedBase(embs, idCol, vecCol, scale)
-    val cents = trainExactCentroids(base, dim, k, iters)
-    val cellCol = l2ArgminCell(col("q"), cents.toSeq.map(_.toSeq))
-      .cast("long")
-    val assigned = base.withColumn("cell", cellCol).select("vec_id", "cell")
+    val cents = trainExactBooks(base, dim, 1, k, iters).head
+    val assigned = base.select(col("vec_id"),
+      exactCell(col("q"), cents).cast("long").as("cell"))
     val counts = assigned.groupBy("cell").agg(count(lit(1)).as("cluster_n"))
     assigned.join(broadcast(counts), Seq("cell"))
       .select("vec_id", "cell", "cluster_n")
@@ -124,11 +117,11 @@ object Embeddings {
 
   /** The quantized training base of [[kmeansExact]]: (vec_id, q) with
     * q = floor(component·scale) per element. KnownNoNullElements: every
-    * element is provably floor(x·scale) of a present float — keeps
-    * dot_long's assignment loop guard-free (the quantizeMilli treatment;
-    * transform() always infers containsNull). */
-  private def quantizedBase(embs: DataFrame, idCol: String, vecCol: String,
-                            scale: Int): DataFrame =
+    * element is provably floor(x·scale) of a present float — keeps the
+    * encoder's loop guard-free (the quantizeMilli treatment; transform()
+    * always infers containsNull). */
+  private[operators] def quantizedBase(embs: DataFrame, idCol: String,
+      vecCol: String, scale: Int): DataFrame =
     embs.select(col(idCol).cast("long").as("vec_id"),
       org.apache.spark.sql.GraftBridge.column(
         org.apache.spark.sql.graft.KnownNoNullElements(
@@ -136,56 +129,59 @@ object Embeddings {
             transform(col(vecCol),
               x => floor(x.cast("double") * scale).cast("long"))))).as("q"))
 
-  /** (squared-distance, cell) argmin as ONE least-of-structs expression:
-    * lexicographic struct order = min distance, ties to min cell id
-    * (k=1: least() needs two args — every row is trivially cell 0).
-    * The distance is the EXPANDED form −2·q·c + |c|² (the common |q|²
-    * cannot change an argmin or its ties): each cell is one fused
-    * dot_long loop against a literal vector instead of `dim`
-    * element_at-diff-square nodes — the k×dim-node tree version blew
-    * past what whole-stage codegen compiles into tight code (measured
-    * 2x slower at k=4, dim=64). Shared with the trained-exact IVF tier
-    * ([[graft.operators.Similarity.knnIvfExact]]), whose cell assignment
-    * must be the SAME rule the training loop optimized. */
-  private[operators] def l2ArgminCell(q: Column,
-                                      cents: Seq[Seq[Long]]): Column = {
-    import graft.functions.GraftFunctions.dotLong
-    if (cents.size == 1) lit(0)
-    else least(cents.zipWithIndex.map { case (c, j) =>
-      val score = lit(-2L) * dotLong(q, typedLit(c)) +
-        lit(c.map(x => x * x).sum)
-      struct(score.as("d"), lit(j).as("j"))
-    }: _*).getField("j")
-  }
+  /** [[org.apache.spark.sql.graft.PqCodesLong]] as a DSL Column: the m
+    * subspace codes of `iq` under m × ksub × dsub integer books (null for
+    * a null vector). The books are a referenced object, not literals. */
+  private[operators] def pqCodesLong(iq: Column,
+                                     books: Seq[Seq[Seq[Long]]]): Column =
+    org.apache.spark.sql.GraftBridge.column(
+      org.apache.spark.sql.graft.PqCodesLong(
+        org.apache.spark.sql.GraftBridge.expression(iq),
+        books.flatten.flatten.toArray, books.size, books.head.size,
+        books.head.head.size))
 
-  /** The Lloyd's loop of [[kmeansExact]], returning the trained integer
-    * centroids: init = the `k` smallest vec_id rows in id order, argmin
-    * assignment via [[l2ArgminCell]], integer floor-average updates,
-    * empty cells keep their previous centroid. Per iteration: one
-    * scan-side codegen'd assignment pass + one hash aggregate collecting
-    * k rows of dim+2 longs to the driver — bounded driver state at any
-    * corpus size. */
-  private def trainExactCentroids(base: DataFrame, dim: Int, k: Int,
-                                  iters: Int): Array[Array[Long]] = {
-    var cents: Array[Array[Long]] = base.orderBy("vec_id").limit(k)
-      .select("q").collect().map(_.getSeq[Long](0).toArray)
-    require(cents.length == k, s"need at least $k input rows")
+  /** The trained-exact cell of `iq`: the m = 1 [[pqCodesLong]] code, cell
+    * 0 for a null vector — the one argmin rule of training and of the
+    * trained IVF tiers ([[graft.operators.Similarity.knnIvfExact]]). */
+  private[operators] def exactCell(iq: Column, cents: Seq[Seq[Long]]): Column =
+    coalesce(element_at(pqCodesLong(iq, Seq(cents)), 1), lit(0))
+
+  /** Integer Lloyd's over `m` subspaces of `dim/m` components at once,
+    * returning m books of `ksub` centroids ([[exactCentroids]] is m = 1).
+    * Init: ONE collect of the `ksub` smallest-vec_id rows. Per iteration:
+    * ONE scan encodes every subspace ([[pqCodesLong]]; the books ride by
+    * reference, so every iteration reuses the generated code) and ONE
+    * aggregate keyed by (subspace, code, component) sums count and
+    * value, at most ksub·dim rows to the driver — one sum per key keeps
+    * the aggregate's code small for any `dim/m` (64 sum columns made the
+    * coarse codebook's compile the slowest step of a cold build).
+    * Floor-average updates; an empty cell keeps its centroid; a null
+    * vector is cell 0 everywhere, counted in `n`, adding nothing. */
+  private[operators] def trainExactBooks(base: DataFrame, dim: Int, m: Int,
+      ksub: Int, iters: Int): Seq[Seq[Seq[Long]]] = {
+    require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
+    val dsub = dim / m
+    val init = base.orderBy("vec_id").limit(ksub).select("q").collect()
+    require(init.length == ksub, s"need at least $ksub input rows")
+    require(!init.exists(_.isNullAt(0)), "initial vectors must be non-null")
+    // PqCodesLong's layout: (subspace j, code c, component d) at
+    // (j·ksub + c)·dsub + d
+    val flat = Array.tabulate(m, ksub, dsub)((j, c, d) =>
+      init(c).getSeq[Long](0)(j * dsub + d)).flatten.flatten
+    def books = flat.toSeq.grouped(dsub).toSeq.grouped(ksub).toSeq
     for (_ <- 1 to iters) {
-      val aggs = count(lit(1)).as("n") +: (0 until dim).map(d =>
-        sum(element_at(col("q"), d + 1)).as(s"s$d"))
-      val rows = base.withColumn("cell",
-          l2ArgminCell(col("q"), cents.toSeq.map(_.toSeq)).cast("long"))
-        .groupBy("cell").agg(aggs.head, aggs.tail: _*)
-        .collect() // bounded: k rows of dim+2 longs
-      val byCell = rows.map(r => r.getLong(0) -> r).toMap
-      cents = cents.zipWithIndex.map { case (old, j) =>
-        byCell.get(j.toLong).map { r =>
-          val n = r.getLong(1)
-          Array.tabulate(dim)(d => fdiv(r.getLong(2 + d), n))
-        }.getOrElse(old)
-      }
+      val codes = coalesce(pqCodesLong(col("q"), books),
+        typedLit(Array.fill(m)(0)))
+      base.select(col("q"), posexplode(codes).as(Seq("j", "c")))
+        .withColumn("d", explode(sequence(lit(0), lit(dsub - 1))))
+        .groupBy("j", "c", "d")
+        .agg(count(lit(1)), coalesce(sum(element_at(col("q"),
+          col("j") * dsub + col("d") + 1)), lit(0L)))
+        .collect() // bounded: ksub·dim rows
+        .foreach(r => flat((r.getInt(0) * ksub + r.getInt(1)) * dsub +
+          r.getInt(2)) = fdiv(r.getLong(4), r.getLong(3)))
     }
-    cents
+    books
   }
 
   /** The trained integer codebook of [[kmeansExact]] as centroid rows —
@@ -194,13 +190,15 @@ object Embeddings {
     * every training step is integer-exact and seed-free, the returned
     * codebook is a pure function of the data: a second engine (the DuckDB
     * oracle) re-derives it bit-for-bit, which is what promotes the
-    * TRAINED ANN tier from rows-only to a full hash oracle (r17). */
+    * TRAINED ANN tier from rows-only to a full hash oracle (r17). It is
+    * [[trainExactBooks]] with m = 1: per iteration one scan and one
+    * aggregate over (subspace, code, component). */
   def exactCentroids(embs: DataFrame, idCol: String, vecCol: String,
                      dim: Int, k: Int = 16, iters: Int = 2,
                      scale: Int = 1000): Seq[Seq[Long]] = {
     require(k >= 1 && iters >= 0 && dim >= 1)
-    trainExactCentroids(quantizedBase(embs, idCol, vecCol, scale),
-      dim, k, iters).map(_.toSeq).toSeq
+    trainExactBooks(quantizedBase(embs, idCol, vecCol, scale),
+      dim, 1, k, iters).head
   }
 
   private val exactCodebooks =

@@ -1357,7 +1357,7 @@ object Similarity {
     val assigned = fannedCorpus(corpus, idCol)
       .select(col(idCol).cast("long").as("neighbor_id"),
         quantizeMilli(col(vecCol)).as("c_iq"))
-      .withColumn("cell", Embeddings.l2ArgminCell(col("c_iq"), centroids))
+      .withColumn("cell", Embeddings.exactCell(col("c_iq"), centroids))
     ivfFixedRank(assigned, exactProbes(queries, idCol, vecCol,
       centroids, nprobe), k, excludeSelf)
   }
@@ -1370,7 +1370,7 @@ object Similarity {
     import corpus.sparkSession.implicits._
     corpus.select(col(idCol), col(vecCol))
       .withColumn("cell",
-        Embeddings.l2ArgminCell(quantizeMilli(col(vecCol)), centroids))
+        Embeddings.exactCell(quantizeMilli(col(vecCol)), centroids))
       .write.partitionBy("cell").mode("overwrite").parquet(s"$path/data")
     centroids.zipWithIndex.map { case (v, i) => (i, v) }
       .toDF("cell", "centroid")
@@ -1451,7 +1451,7 @@ object Similarity {
       .where(exists(col(vecCol), x => x =!= lit(0.0f)))
       .select(col(idCol).cast("long").as("neighbor_id"),
         int8Codes(col(vecCol)).as("c8"),
-        Embeddings.l2ArgminCell(quantizeMilli(col(vecCol)), centroids)
+        Embeddings.exactCell(quantizeMilli(col(vecCol)), centroids)
           .as("cell"))
     val qFull = queries.select(col(idCol).cast("long").as("query_id"),
       col(vecCol).as("q_vec"), int8Codes(col(vecCol)).as("q8"))
@@ -1468,37 +1468,35 @@ object Similarity {
   private val exactPqBookCache =
     new graft.SessionMemo[(String, Int, Int, Int, Int), Seq[Seq[Seq[Long]]]]()
 
-  /** TRAINED-exact PQ sub-codebooks (r17): subspace `j`'s book is
-    * [[Embeddings.exactCentroids]] over the j-th `dim/m`-component slice
-    * of the embedding — integer milli-space, seed-free init, L2 argmin,
-    * floor-average updates — so the whole m-book set is a pure function
-    * of the data that SQL re-derives (slice-then-quantize ==
-    * quantize-then-slice, elementwise floor). Unlike the float
-    * [[trainPqCodebooks]] there is NO normalization: codes quantize the
-    * raw vector and ADC ranks by exact integer squared-L2, the metric
-    * the books were trained with (the fp32 cosine re-rank restores the
-    * cosine semantics on the shortlist, as in every quantized tier).
-    * Memoized per dataset (the [[Embeddings.exactCentroidsFor]]
-    * contract). */
+  /** TRAINED-exact PQ sub-codebooks (r17): subspace `j`'s book is the
+    * exact integer k-means ([[Embeddings.exactCentroids]]) of the j-th
+    * `dim/m`-component slice of the embedding — integer milli-space,
+    * seed-free init, L2 argmin, floor-average updates — so the whole
+    * m-book set is a pure function of the data that SQL re-derives
+    * (slice-then-quantize == quantize-then-slice, elementwise floor).
+    * All m books train in ONE Lloyd loop
+    * ([[Embeddings.trainExactBooks]]): per iteration one scan encodes
+    * every subspace and one aggregate over (subspace, code, component)
+    * updates every book, so the job count does not grow with m. Unlike
+    * the float [[trainPqCodebooks]] there is NO normalization: codes
+    * quantize the raw vector and ADC ranks by exact integer squared-L2,
+    * the metric the books were trained with (the fp32 cosine re-rank
+    * restores the cosine semantics on the shortlist, as in every
+    * quantized tier). Memoized per dataset (the
+    * [[Embeddings.exactCentroidsFor]] contract). */
   def exactPqBooksFor(embs: DataFrame, idCol: String, vecCol: String,
                       dim: Int, m: Int, ksub: Int = 16, iters: Int = 2,
-                      key: String): Seq[Seq[Seq[Long]]] = {
-    require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
-    val dsub = dim / m
+                      key: String): Seq[Seq[Seq[Long]]] =
     exactPqBookCache.getOrCompute(embs.sparkSession,
         (key, dim, m, ksub, iters)) {
-      (0 until m).map { j =>
-        Embeddings.exactCentroids(
-          embs.select(col(idCol),
-            slice(col(vecCol), j * dsub + 1, dsub).as("_sub")),
-          idCol, "_sub", dsub, ksub, iters)
-      }
+      Embeddings.trainExactBooks(
+        Embeddings.quantizedBase(embs, idCol, vecCol, 1000),
+        dim, m, ksub, iters)
     }
-  }
 
   /** PQ/ADC search over TRAINED-exact sub-codebooks (r17): encode =
     * per-subspace integer L2 argmin against book `j` (ties to the
-    * smallest code — [[Embeddings.l2ArgminCell]]), ADC LUT per query =
+    * smallest code — [[Embeddings.pqCodesLong]]), ADC LUT per query =
     * `−2·q_j·c + |c|²` per codeword (the per-(query, subspace) `|q_j|²`
     * constant cannot change a ranking), candidates ranked by summed ADC
     * distance ascending, fp32 cosine re-rank of the shortlist — every
@@ -1522,7 +1520,8 @@ object Similarity {
     val encoded = fannedCorpus(corpus, idCol)
       .where(exists(col(vecCol), x => x =!= lit(0.0f)))
       .select(col(idCol).cast("long").as("neighbor_id"),
-        pqCodesLong(quantizeMilli(col(vecCol)), books, dsub).as("_codes"))
+        Embeddings.pqCodesLong(quantizeMilli(col(vecCol)), books)
+          .as("_codes"))
     val qFull = queries.select(col(idCol).cast("long").as("query_id"),
       col(vecCol).as("q_vec"), quantizeMilli(col(vecCol)).as("q_iq"))
     // LUTs are |queries|-bounded — the Column form is fine on this side
@@ -1535,14 +1534,6 @@ object Similarity {
     cutAndRerank(kept.withColumn("approx", -pqAdcSum(books)), corpus,
       qFull.select("query_id", "q_vec"), idCol, vecCol, k, candidates)
   }
-
-  /** [[org.apache.spark.sql.graft.PqCodesLong]] as a DSL Column. */
-  private def pqCodesLong(iq: Column, books: Seq[Seq[Seq[Long]]],
-                          dsub: Int): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      org.apache.spark.sql.graft.PqCodesLong(
-        org.apache.spark.sql.GraftBridge.expression(iq),
-        books.flatten.flatten.toArray, books.size, books.head.size, dsub))
 
   /** ADC LUT table per query — ONE flat `array<long>` column `_lut` of
     * m·ksub exact integer terms `lut[j·ksub + c] = −2·q_j·c + |c|²` — and
@@ -1585,16 +1576,13 @@ object Similarity {
     require(books.nonEmpty && dim % books.size == 0)
     val m = books.size
     val dsub = dim / m
-    // the coarse cell rides the SAME one-loop kernel as an m=1 book
-    // (full-L2 strict-< argmin == the least-struct expanded argmin,
-    // ties to the smallest index on both)
     val encoded = fannedCorpus(corpus, idCol)
       .where(exists(col(vecCol), x => x =!= lit(0.0f)))
       .select(col(idCol).cast("long").as("neighbor_id"),
         quantizeMilli(col(vecCol)).as("_iq"))
       .select(col("neighbor_id"),
-        element_at(pqCodesLong(col("_iq"), Seq(coarse), dim), 1).as("cell"),
-        pqCodesLong(col("_iq"), books, dsub).as("_codes"))
+        Embeddings.exactCell(col("_iq"), coarse).as("cell"),
+        Embeddings.pqCodesLong(col("_iq"), books).as("_codes"))
     val qFull = queries.select(col(idCol).cast("long").as("query_id"),
       col(vecCol).as("q_vec"), quantizeMilli(col(vecCol)).as("q_iq"))
     val luts = pqAdcLuts(qFull, books, dsub)

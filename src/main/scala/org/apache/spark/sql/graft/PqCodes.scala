@@ -93,12 +93,13 @@ object PqCodes {
 /** Integer PQ encoder for the TRAINED-exact tier (r17): all `m` subspace
   * codes of a milli-quantized long vector in one codegen-called loop —
   * `codes[j] = argmin_c ‖q_j − book_{j,c}‖²` in exact integer arithmetic,
-  * ties to the SMALLEST code (strict `<` keeps the first index — the same
-  * rule as the exact k-means' least-struct argmin and the oracle's
-  * `ORDER BY dist, j`). The Column form (per-subspace `least` over ksub
-  * structs) fell out of whole-stage codegen at m=16 and ran interpreted —
-  * measured as the dominant cost of the exact PQ scan; this is a flat
-  * long-array walk with zero per-candidate allocation. No normalization:
+  * ties to the SMALLEST code (strict `<` keeps the first index — the
+  * oracle's `ORDER BY dist, j`). The exact k-means trains with this same
+  * kernel (`graft.operators.Embeddings.trainExactBooks`). The Column form
+  * (per-subspace `least` over ksub structs) fell out of whole-stage
+  * codegen at m=16 and ran interpreted — measured as the dominant cost
+  * of the exact PQ scan; this is a flat long-array walk with zero
+  * per-candidate allocation. No normalization:
   * the books were trained on the raw quantized space (L2 metric).
   */
 case class PqCodesLong(child: Expression, books: Array[Long],

@@ -24,6 +24,44 @@ class PipelinesSpec extends SparkSpec {
     assert(out.columns.contains("tot_tax_amt")) // extended fields flow through
   }
 
+  test("importDeclarations lands every row when a member has no dates") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("pipe_dates").toString
+    val inbox = s"$root/inbox"
+    new java.io.File(inbox).mkdirs()
+    // one zip member whose BID_HEADs carry IMPORT_DATE / DCL_DATE /
+    // DOC_DATE, a second whose BID_HEAD carries none of them
+    def head(hawb: String, dates: String) =
+      s"<BID_HEAD>$dates<MAWB>DATES01EX</MAWB><HAWB_NO>$hawb</HAWB_NO>" +
+        "<DESCRIPTION>x</DESCRIPTION><QTY>1</QTY></BID_HEAD>"
+    def xml(heads: String*) =
+      "<?xml version=\"1.0\" encoding=\"UTF-8\"?><GicDataSet>" +
+        heads.mkString + "</GicDataSet>"
+    val dated = "<IMPORT_DATE>2025-04-01T00:00:00+08:00</IMPORT_DATE>" +
+      "<DCL_DATE>2025-04-02T00:00:00+08:00</DCL_DATE>" +
+      "<DOC_DATE>2025-04-03T00:00:00+08:00</DOC_DATE>"
+    val zip = new java.util.zip.ZipOutputStream(
+      Files.newOutputStream(java.nio.file.Paths.get(s"$inbox/dates.zip")))
+    try {
+      Seq("dated.xml" -> xml(head("HB1", dated), head("HB2", dated)),
+          "undated.xml" -> xml(head("HB3", ""))).foreach { case (n, body) =>
+        zip.putNextEntry(new java.util.zip.ZipEntry(n))
+        zip.write(body.getBytes("UTF-8"))
+        zip.closeEntry()
+      }
+    } finally zip.close()
+    Pipelines.importDeclarations(spark, inbox, s"$root/history",
+      s"$root/archive", s"$root/ckpt").awaitTermination()
+    val got = spark.read.parquet(s"$root/history")
+      .select($"hawb_no", $"import_date".cast("string"),
+        $"dcl_date".cast("string"), $"doc_date".cast("string"))
+      .as[(String, String, String, String)].collect().sortBy(_._1).toSeq
+    assert(got === Seq(
+      ("HB1", "2025-04-01", "2025-04-02", "2025-04-03"),
+      ("HB2", "2025-04-01", "2025-04-02", "2025-04-03"),
+      ("HB3", null, null, null)))
+  }
+
   test("importManifests appends all layouts in one pass and reports rejects") {
     import spark.implicits._
     val root = Files.createTempDirectory("pipe_a").toString

@@ -64,6 +64,13 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(eval1("2025-03-22T00:00:00+08:00", c => isoDate(c)) === "2025-03-22")
   }
 
+  test("isoDate is null on an empty or unparseable date, not an ANSI error") {
+    assert(eval1("", c => isoDate(c)) === null)
+    assert(eval1("not-a-date", c => isoDate(c)) === null)
+    assert(eval1("2025-13-45T00:00:00+08:00", c => isoDate(c)) === null)
+    assert(eval1("2025-03-22", c => isoDate(c)) === "2025-03-22")
+  }
+
   test("isRealValue rejects nan/none/blank sentinels") {
     import spark.implicits._
     val got = Seq("x", "nan", "NaN", "none", "", "  ", "0")

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 class EmbeddingsSpec extends SparkSpec {
@@ -101,6 +103,137 @@ class EmbeddingsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect()
     assert(got.length === 50)
     assert(got.forall(r => r._2 === 0L && r._3 === 50L))
+  }
+
+  // ---- exact PQ sub-codebooks: one trainer for every subspace ----
+
+  /** Plain-Scala integer Lloyd's over `m` subspaces, written from the
+    * rule alone: quantize to floor(x·1000), init = the `ksub` smallest
+    * ids, argmin of squared L2 with ties to the smallest code, floor-
+    * average updates, an empty cell keeps its centroid. A null vector
+    * lands in cell 0 of every subspace, counts in `n` and adds nothing
+    * to the sums. */
+  private def lloydReference(rows: Seq[(Long, Array[Float])], dim: Int,
+                             m: Int, ksub: Int,
+                             iters: Int): Seq[Seq[Seq[Long]]] = {
+    val dsub = dim / m
+    val q = rows.sortBy(_._1).map { case (_, v) =>
+      Option(v).map(_.map(x => math.floor(x.toDouble * 1000).toLong)) }
+    (0 until m).map { j =>
+      val sub = q.map(_.map(_.slice(j * dsub, (j + 1) * dsub)))
+      var cents = sub.take(ksub).map(_.get.toSeq)
+      def cellOf(v: Option[Array[Long]]): Int = v.fold(0) { x =>
+        cents.indices.minBy(c => (cents(c).zip(x)
+          .map { case (a, b) => (a - b) * (a - b) }.sum, c))
+      }
+      for (_ <- 1 to iters) {
+        val cells = sub.map(cellOf)
+        cents = cents.indices.map { c =>
+          val members = sub.zip(cells).collect { case (v, `c`) => v }
+          if (members.isEmpty) cents(c)
+          else (0 until dsub).map(d => Math.floorDiv(
+            members.flatten.map(_(d)).sum, members.size.toLong))
+        }
+      }
+      cents
+    }
+  }
+
+  /** The engine's books for `m` subspaces: the exact k-means codebook
+    * when m = 1, the exact PQ sub-codebooks otherwise. */
+  private def engineBooks(embs: org.apache.spark.sql.DataFrame, dim: Int,
+                          m: Int, ksub: Int, iters: Int,
+                          key: String): Seq[Seq[Seq[Long]]] =
+    if (m == 1) Seq(Embeddings.exactCentroids(embs, "vec_id", "embedding",
+      dim = dim, k = ksub, iters = iters))
+    else Similarity.exactPqBooksFor(embs, "vec_id", "embedding", dim = dim,
+      m = m, ksub = ksub, iters = iters, key = key)
+
+  test("exact PQ books on sf data equal per-subspace exactCentroids " +
+    "over each slice and the plain-Scala Lloyd reference") {
+    import spark.implicits._
+    val embs = graft.Tables(spark, sfDir, "embeddings")
+    val books = Similarity.exactPqBooksFor(embs, "vec_id", "embedding",
+      dim = 64, m = 16, ksub = 16, key = "spec-pq-per-slice")
+    val perSlice = (0 until 16).map { j =>
+      Embeddings.exactCentroids(embs.select(col("vec_id"),
+        slice(col("embedding"), j * 4 + 1, 4).as("embedding")),
+        "vec_id", "embedding", dim = 4, k = 16, iters = 2)
+    }
+    assert(books === perSlice)
+    val rows = embs.select("vec_id", "embedding")
+      .as[(Long, Array[Float])].collect().toSeq
+    assert(books === lloydReference(rows, dim = 64, m = 16, ksub = 16,
+      iters = 2))
+  }
+
+  test("exact trainer agrees with the plain-Scala Lloyd reference: " +
+    "m in {1, 2, 4}, ties, an empty cell, iters = 0, k = 1, null vectors") {
+    import spark.implicits._
+    val fill = (x: Float) => Array.fill(4)(x)
+    // ties: id 4 sits exactly between the two initial centroids; ids 5
+    // and 6 are null vectors
+    val ties = Seq(0L -> fill(0f), 1L -> fill(1f), 2L -> fill(0.1f),
+      3L -> fill(0.9f), 4L -> fill(0.5f), 5L -> null, 6L -> null)
+    // two equal initial centroids: every row ties to cell 0 in the first
+    // iteration, so cell 1 is empty and keeps its centroid
+    val empty = Seq(0L -> fill(0.2f), 1L -> fill(0.2f), 2L -> fill(0.4f),
+      3L -> fill(0f), 4L -> null)
+    // the null vectors pull cell 0 toward the origin, so in the second
+    // iteration only they remain in it: an all-null cell averages to 0
+    val nullOnly = Seq(0L -> fill(1f), 1L -> fill(0.6f), 2L -> null,
+      3L -> null, 4L -> null)
+    val rnd = new scala.util.Random(17)
+    val spread = (0L until 30L).map(i =>
+      i -> Array.fill(4)((rnd.nextInt(2001) - 1000) / 1000f)) :+
+      (100L -> null)
+    val cases = Seq(
+      ("ties", ties, 1, 2, 2), ("ties", ties, 2, 2, 2),
+      ("ties", ties, 4, 2, 2), ("ties", ties, 2, 2, 0),
+      ("empty", empty, 1, 2, 2), ("empty", empty, 2, 2, 2),
+      ("nullOnly", nullOnly, 1, 2, 2), ("nullOnly", nullOnly, 2, 2, 2),
+      ("spread", spread, 1, 3, 3), ("spread", spread, 2, 3, 3),
+      ("spread", spread, 4, 3, 3), ("spread", spread, 4, 1, 1))
+    cases.foreach { case (name, rows, m, ksub, iters) =>
+      val embs = rows.toDF("vec_id", "embedding")
+      val got = engineBooks(embs, dim = 4, m = m, ksub = ksub,
+        iters = iters, key = s"spec-lloyd-$name-$m-$ksub-$iters")
+      assert(got === lloydReference(rows, dim = 4, m = m, ksub = ksub,
+        iters = iters), s"$name m=$m ksub=$ksub iters=$iters")
+    }
+  }
+
+  test("training 16 PQ subspaces starts no more Spark jobs than one") {
+    val embs = graft.Tables(spark, sfDir, "embeddings")
+    val sc = spark.sparkContext
+    def jobsOf(group: String)(train: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(j.properties)
+              .exists(_.getProperty("spark.jobGroup.id") == group))
+            n.incrementAndGet()
+      }
+      sc.addSparkListener(l)
+      sc.setJobGroup(group, group)
+      try train finally {
+        sc.clearJobGroup()
+        org.apache.spark.GraftTestBridge.waitForListeners(sc)
+        sc.removeSparkListener(l)
+      }
+      n.get
+    }
+    val one = jobsOf("spec-train-m1") {
+      engineBooks(embs, dim = 64, m = 1, ksub = 16, iters = 2, key = "")
+    }
+    val sixteen = jobsOf("spec-train-m16") {
+      engineBooks(embs, dim = 64, m = 16, ksub = 16, iters = 2,
+        key = "spec-train-jobs")
+    }
+    info(s"training jobs: m=1 $one, m=16 $sixteen")
+    assert(one > 0)
+    assert(sixteen <= one)
   }
 
   // ---- PCA ----

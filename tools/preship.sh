@@ -11,6 +11,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
 tools/verify_local.sh "$SF_DIR"
+python3 tools/check_readme_counts.py
 sbt -batch test
 echo "== preship: correctness gate + full test suite GREEN at sha $(git rev-parse --short HEAD)"
 echo "== preship: commit THIS tree (no further source edits before the snapshot)"
